@@ -15,8 +15,21 @@ Tier write-back: the reference computes the daily temperature aggregate on
 demand and writes it back to ``daily_aggregate_temperature``
 (``TemperatureActor.scala:76-77,90``); the monthly query then *reads that
 table* (``TemperatureActor.scala:65-69``).  ``WeatherEngine`` reproduces the
-load-bearing dependency with materialized tier tables (parquet paths or temp
-views) refreshed by :meth:`refresh_daily_tiers`.
+load-bearing dependency with materialized daily tiers (parquet paths, or
+cached in-memory rollups without paths) refreshed by
+:meth:`refresh_daily_tiers` and folded forward by :meth:`ingest_raw`.  Every
+tier request, GetDailyTemperature included, reads a tier rather than
+re-aggregating raw.
+
+Serving state lives in Spark block storage.  Each tier-path refresh
+snapshots both tiers with an eager ``localCheckpoint`` and swaps the
+references under the tier lock; ``ingest_raw`` snapshots each new batch the
+same way before unioning it into ``raw``; the 20-row sky lookup is built
+once.  Refresh and ingest pay for the materialization, so an ask never
+reopens a tier file, never re-evaluates the caller's batch plan and never
+rebuilds the lookup from Python.  A request built before a refresh keeps
+reading the snapshot it captured, so the refresh's dynamic partition
+overwrite cannot delete files out from under it.
 """
 
 from __future__ import annotations
@@ -70,28 +83,28 @@ class WeatherEngine:
 
         self._tier_lock = threading.RLock()
         self._views_registered = False
+        self._sky: DataFrame | None = None
 
     # -- tier materialization (the reference's write-back, batch form) ------
-    def refresh_daily_tiers(
-        self, cache: bool = True, units: list[int] | None = None
-    ) -> None:
-        with self._tier_lock:
-            return self._refresh_daily_tiers_locked(cache=cache, units=units)
-
-    def _refresh_daily_tiers_locked(
-        self, cache: bool = True, units: list[int] | None = None
-    ) -> None:
+    def refresh_daily_tiers(self, units: list[int] | None = None) -> None:
         """Materialize the daily temperature + precip tiers; later queries
-        read these (A2/A3/A5 read the daily tier, not raw — the reference's
-        tiered rollup, README.md:146-148).
+        read these (A1/A2/A3/A5 read the daily tier, not raw — the
+        reference's tiered rollup, README.md:146-148).
 
         With tier paths configured, this is an incremental refresh
         (``operators/incremental.py``): only the calendar units at-or-after
         the tier's watermark — or exactly ``units`` when given (the ingest
         write-back form) — are recomputed and dynamic-partition-overwritten
-        — at 100 TB, an O(new-day) job, not O(corpus).  Without paths it
-        falls back to the in-memory full rollup (fine for on-demand/test
-        sessions)."""
+        — at 100 TB, an O(new-day) job, not O(corpus).  Both tiers are then
+        read back once into an eager ``localCheckpoint`` and swapped in
+        under the tier lock: asks read block storage, never the tier files,
+        so the next refresh's overwrite cannot race them.  Without paths it
+        falls back to the cached in-memory full rollup (fine for
+        on-demand/test sessions)."""
+        with self._tier_lock:
+            self._refresh_daily_tiers_locked(units)
+
+    def _refresh_daily_tiers_locked(self, units: list[int] | None) -> None:
         from killrweather_spark.operators.incremental import incremental_refresh
 
         if self.daily_temperature_path and self.daily_precip_path:
@@ -114,12 +127,15 @@ class WeatherEngine:
                 [F.sum("one_hour_precip").alias("precipitation")],
                 units=units,
             )
-            self._daily_temp = self.spark.read.parquet(
-                self.daily_temperature_path
-            ).drop("date_key")
-            self._daily_precip = self.spark.read.parquet(
-                self.daily_precip_path
-            ).drop("date_key")
+            # no unpersist of the previous snapshots: a request built before
+            # this refresh may still be reading them; the context cleaner
+            # drops their blocks once nothing references them
+            self._daily_temp, self._daily_precip = (
+                self.spark.read.parquet(path)
+                .drop("date_key")
+                .localCheckpoint(eager=True)
+                for path in (self.daily_temperature_path, self.daily_precip_path)
+            )
             return
         # drop the previous refresh's cache entries eagerly — reassignment
         # alone leaves them pinned in executor storage until the context
@@ -131,49 +147,49 @@ class WeatherEngine:
                     old.unpersist()
                 except Exception:  # noqa: BLE001 — uncached frames are fine
                     pass
-        self._daily_temp = daily_stats(self.raw, DAY_KEYS, "temperature")
+        self._daily_temp = daily_stats(self.raw, DAY_KEYS, "temperature").cache()
         self._daily_precip = daily_sum(
             self.raw, DAY_KEYS, "one_hour_precip", out="precipitation"
-        )
-        if cache:
-            self._daily_temp = self._daily_temp.cache()
-            self._daily_precip = self._daily_precip.cache()
+        ).cache()
 
     def ingest_raw(self, new_raw: DataFrame) -> None:
         """Append new observations and fold them into the daily tiers.
 
         The reference's ingest path updates the daily tier per key as data
         arrives (TemperatureActor.scala:76-77 write-back; the Cassandra
-        counter for precip).  Batch form: union the new rows into ``raw``
-        and refresh exactly the calendar units the new rows touch — with
-        tier paths configured, ONLY those tier partitions rewrite, even for
-        late rows older than the watermark (pinned by
-        ``test_engine.py::test_ingest_raw_updates_only_new_tier_partitions``)."""
-        from killrweather_spark.operators.incremental import (
-            date_key,
-            tier_watermark,
-        )
-
-        self._tier_lock.acquire()  # raw rebind + refresh must be atomic
-        try:
-            self._ingest_raw_locked(new_raw, date_key, tier_watermark)
+        counter for precip).  Batch form: snapshot the new rows once (eager
+        ``localCheckpoint``, so no later read re-evaluates the caller's
+        plan), union them into ``raw`` and refresh exactly the calendar
+        units they touch — with tier paths configured, ONLY those tier
+        partitions rewrite, even for late rows older than the watermark
+        (pinned by
+        ``test_engine.py::test_ingest_raw_updates_only_new_tier_partitions``),
+        and both tiers are re-snapshotted before this returns."""
+        with self._tier_lock:  # raw rebind + refresh must be atomic
+            self._ingest_raw_locked(new_raw)
             if self._views_registered:
                 # temp views snapshot DataFrame plans: re-register so SQL
                 # sees the post-ingest raw + tiers instead of silently
                 # serving stale pre-ingest data
                 self.register_views()
-        finally:
-            self._tier_lock.release()
 
-    def _ingest_raw_locked(self, new_raw, date_key, tier_watermark) -> None:
-        self.raw = self.raw.unionByName(new_raw.select(*self.raw.columns))
+    def _ingest_raw_locked(self, new_raw: DataFrame) -> None:
+        from killrweather_spark.operators.incremental import (
+            date_key,
+            tier_watermark,
+        )
+
+        batch = new_raw.select(*self.raw.columns).localCheckpoint(eager=True)
+        self.raw = self.raw.unionByName(batch)
         if self.daily_temperature_path and self.daily_precip_path:
             # Units mode is only valid once the tiers are materialized: on a
             # never-refreshed engine it would write just the new batch's
             # units and silently drop every pre-existing raw day (and set
             # the watermark past them, making watermark-mode backfill
-            # impossible).  Bootstrap with a full build first.
-            if (
+            # impossible).  Bootstrap with a full build first.  An engine
+            # that refreshed both tiers itself knows they exist; only one
+            # opened over existing tier paths has to probe them.
+            if self._daily_temp is None and (
                 tier_watermark(self.spark, self.daily_temperature_path) is None
                 or tier_watermark(self.spark, self.daily_precip_path) is None
             ):
@@ -184,9 +200,7 @@ class WeatherEngine:
             touched = [
                 r.dk
                 for r in _collect_touched(
-                    new_raw.select(
-                        date_key(["year", "month", "day"]).alias("dk")
-                    ),
+                    batch.select(date_key(["year", "month", "day"]).alias("dk")),
                     ["dk"],
                 )
             ]
@@ -209,6 +223,21 @@ class WeatherEngine:
                 if self._daily_precip is None:
                     self.refresh_daily_tiers()
         return self._daily_precip
+
+    @property
+    def sky_condition_table(self) -> DataFrame:
+        """The static 20-row lookup, built from Python once per engine."""
+        if self._sky is None:
+            with self._tier_lock:
+                if self._sky is None:
+                    from killrweather_spark.sources.readers import (
+                        sky_condition_lookup_df,
+                    )
+
+                    self._sky = sky_condition_lookup_df(
+                        self.spark
+                    ).localCheckpoint(eager=True)
+        return self._sky
 
     # -- §2.11 request surface ---------------------------------------------
     def get_weather_station(self, wsid: str) -> DataFrame:
@@ -240,12 +269,16 @@ class WeatherEngine:
     ) -> DataFrame:
         """GetDailyTemperature → A1 (TemperatureActor.scala:55-60).
 
-        Computed from raw for the requested key (the reference recomputes on
-        demand too); ``refresh_daily_tiers`` is the batch write-back."""
-        day_rows = point_lookup(
-            self.raw, {"wsid": wsid, "year": year, "month": month, "day": day}
+        A point lookup on the daily temperature tier, which holds exactly
+        this row: the reference recomputes on demand and writes the answer
+        back (TemperatureActor.scala:76-77); here ``refresh_daily_tiers``
+        and ``ingest_raw`` keep the tier current with the same
+        max/min/avg/var_pop/stddev_pop aggregates, so the ask never
+        re-aggregates raw."""
+        return point_lookup(
+            self.daily_temperature_table,
+            {"wsid": wsid, "year": year, "month": month, "day": day},
         )
-        return daily_stats(day_rows, DAY_KEYS, "temperature")
 
     def get_monthly_temperature(self, wsid: str, year: int, month: int) -> DataFrame:
         """GetMonthlyTemperature — declared in the reference but never
@@ -340,9 +373,7 @@ class WeatherEngine:
     def get_sky_condition_lookup(self, code: int) -> DataFrame:
         """GetSkyConditionLookup — declared-unimplemented in the reference
         (WeatherEvent.scala:55-59); trivial here (flagged extension)."""
-        from killrweather_spark.sources.readers import sky_condition_lookup_df
-
-        return point_lookup(sky_condition_lookup_df(self.spark), {"code": code})
+        return point_lookup(self.sky_condition_table, {"code": code})
 
     # -- SQL entry point (≙ CassandraSQLContext, SampleJoin.scala:39-50) ----
     def register_views(self) -> None:
@@ -358,8 +389,6 @@ class WeatherEngine:
         down into the underlying scans.
         """
         from pyspark.sql import Window
-
-        from killrweather_spark.sources.readers import sky_condition_lookup_df
 
         self._views_registered = True
         self.raw.createOrReplaceTempView("raw_weather_data")
@@ -378,9 +407,7 @@ class WeatherEngine:
             "wsid", "year", "month", "day",
             F.sum("precipitation").over(w).alias("cumulative"),
         ).createOrReplaceTempView("year_cumulative_precip")
-        sky_condition_lookup_df(self.spark).createOrReplaceTempView(
-            "sky_condition_lookup"
-        )
+        self.sky_condition_table.createOrReplaceTempView("sky_condition_lookup")
 
     def register_sql_functions(self) -> None:
         """Declare the engine's portable primitives as Spark 4 SQL scalar

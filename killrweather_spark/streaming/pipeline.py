@@ -460,24 +460,25 @@ def run_stream_to_batch(
     Leak-free by construction: the drained result is detached from the
     memory sink (eager ``localCheckpoint``), so the uuid-named sink table is
     dropped from the session catalog and the one-shot checkpoint directory
-    is deleted before returning — repeated bench/sweep runs accumulate
-    neither temp views nor checkpoint dirs."""
+    is deleted before returning — also when the stream fails, so repeated
+    bench/sweep runs accumulate neither temp views nor checkpoint dirs."""
     import shutil
 
     spark = stream_df.sparkSession
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.table(query_name).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(query_name)
-    shutil.rmtree(checkpoint_dir, ignore_errors=True)
-    return out
+    try:
+        (
+            stream_df.writeStream.format("memory")
+            .queryName(query_name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+        return spark.table(query_name).localCheckpoint(eager=True)
+    finally:
+        spark.catalog.dropTempView(query_name)
+        shutil.rmtree(checkpoint_dir, ignore_errors=True)
 
 
 def start_cdc_apply(

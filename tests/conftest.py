@@ -4,6 +4,7 @@ import pytest
 
 from killrweather_spark.session import get_session
 from killrweather_spark.streaming.protobuf_shim import enable_vendored_protobuf
+from tests.weather_inputs import write_weather_inputs
 
 SF001 = "/root/testdata/sf0.001"
 SF01 = "/root/testdata/sf0.01"
@@ -26,3 +27,10 @@ def spark(tmp_path_factory):
         },
     )
     yield s
+
+
+@pytest.fixture(scope="session")
+def weather_inputs():
+    """Write the seeded ISD-lite inputs (``tests/weather_inputs.py``) once
+    per session; tests address them through ``WEATHER_INPUTS``."""
+    return write_weather_inputs()

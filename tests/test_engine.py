@@ -1,9 +1,10 @@
-"""WeatherEngine request-surface tests on the reference's own sample data.
+"""WeatherEngine request-surface tests on seeded ISD-lite sample data.
 
 Mirrors the reference's integration specs (TemperatureActorSpec,
 PrecipitationActorSpec, WeatherStationActorSpec) but with exact-value
 assertions computed independently in Python — stronger than the reference's
-shape/threshold checks (SURVEY §5).
+shape/threshold checks (SURVEY §5).  The inputs are generated in the
+reference's ``data/`` layout by ``tests/weather_inputs.py``.
 """
 
 from __future__ import annotations
@@ -18,9 +19,14 @@ from pyspark.sql import functions as F
 
 from killrweather_spark.api.engine import WeatherEngine
 from killrweather_spark.sources.readers import read_raw_csv
+from tests.weather_inputs import SF as WSID
+from tests.weather_inputs import WEATHER_INPUTS
 
-REF_CSV_GZ = "/root/reference/data/load/sf-2008.csv.gz"
-WSID = "724940:23234"
+REF_CSV_GZ = str(WEATHER_INPUTS / "load" / "sf-2008.csv.gz")
+NY_SF_CSV_GZ = str(WEATHER_INPUTS / "load" / "ny-sf-2008.csv.gz")
+STATIONS_CSV = str(WEATHER_INPUTS / "weather_stations.csv")
+
+pytestmark = pytest.mark.usefixtures("weather_inputs")
 
 
 @pytest.fixture(scope="module")
@@ -136,9 +142,7 @@ def test_get_weather_station_dimension(spark):
     from killrweather_spark.api.engine import WeatherEngine
     from killrweather_spark.model.schemas import WEATHER_STATION
 
-    stations = spark.read.schema(WEATHER_STATION).csv(
-        "/root/reference/data/weather_stations.csv"
-    )
+    stations = spark.read.schema(WEATHER_STATION).csv(STATIONS_CSV)
     raw = read_raw_csv(spark, REF_CSV_GZ)
     eng = WeatherEngine(spark, raw, stations=stations)
     row = eng.get_weather_station(WSID).first()
@@ -154,9 +158,7 @@ def test_sql_views_entry_point(spark):
     including a raw×dimension join (J1/J2)."""
     from killrweather_spark.model.schemas import WEATHER_STATION
 
-    stations = spark.read.schema(WEATHER_STATION).csv(
-        "/root/reference/data/weather_stations.csv"
-    )
+    stations = spark.read.schema(WEATHER_STATION).csv(STATIONS_CSV)
     raw = read_raw_csv(spark, REF_CSV_GZ)
     eng = WeatherEngine(spark, raw, stations=stations)
     eng.register_views()
@@ -245,7 +247,7 @@ def test_multi_station_client_loop(spark):
     import gzip
     import statistics as st
 
-    combined = read_raw_csv(spark, "/root/reference/data/load/ny-sf-2008.csv.gz")
+    combined = read_raw_csv(spark, NY_SF_CSV_GZ)
     eng = WeatherEngine(spark, combined)
     eng.refresh_daily_tiers()
     stations = [r.wsid for r in combined.select("wsid").distinct().collect()]
@@ -253,7 +255,7 @@ def test_multi_station_client_loop(spark):
 
     # independent ground truth per station from the gz file
     temps: dict[str, list[float]] = {}
-    with gzip.open("/root/reference/data/load/ny-sf-2008.csv.gz", "rt") as f:
+    with gzip.open(NY_SF_CSV_GZ, "rt") as f:
         for line in f:
             p = line.strip().split(",")
             if int(p[2]) == 1 and int(p[3]) == 1:
@@ -277,7 +279,7 @@ def test_seven_year_five_station_end_to_end(spark, tmp_path):
     import time
     import zipfile
 
-    src = "/root/reference/data/load/sfo-nyc-mia-lax-chi-2008-2014.csv.zip"
+    src = WEATHER_INPUTS / "load" / "sfo-nyc-mia-lax-chi-2008-2014.csv.zip"
     csv = tmp_path / "big.csv"
     with zipfile.ZipFile(src) as z:
         csv.write_bytes(z.read(z.infolist()[0].filename))
@@ -326,9 +328,7 @@ def test_nearest_stations_matches_python_haversine(spark):
     from killrweather_spark.model.schemas import WEATHER_STATION
     from killrweather_spark.plans import checks
 
-    stations = spark.read.schema(WEATHER_STATION).csv(
-        "/root/reference/data/weather_stations.csv"
-    )
+    stations = spark.read.schema(WEATHER_STATION).csv(STATIONS_CSV)
     eng = WeatherEngine(spark, read_raw_csv(spark, REF_CSV_GZ), stations=stations)
     sf_lat, sf_lon, k = 37.7749, -122.4194, 5
     got = eng.nearest_stations(sf_lat, sf_lon, k=k)
@@ -342,7 +342,7 @@ def test_nearest_stations_matches_python_haversine(spark):
         return 2 * r * math.asin(math.sqrt(a))
 
     expected = []
-    with open("/root/reference/data/weather_stations.csv") as f:
+    with open(STATIONS_CSV) as f:
         for rec in csv.reader(f):
             try:
                 lat, lon = float(rec[5]), float(rec[6])
@@ -445,3 +445,98 @@ def test_ingest_raw_bootstraps_unmaterialized_tiers(spark, tmp_path):
     assert days == {(2007, 6, 10), (2008, 1, 2)}
     hi = eng.get_monthly_hilow_temperature("s1", 2007, 6).first()
     assert (hi.high, hi.low) == (25.0, 25.0)
+
+
+def test_tier_read_survives_late_row_overwrite(spark, tmp_path):
+    """A request built before an ``ingest_raw`` whose late row rewrites that
+    day's tier partition must still collect: it reads the tier snapshot it
+    captured, not parquet files the dynamic overwrite deletes (reading the
+    files failed with FAILED_READ_FILE.FILE_NOT_EXIST)."""
+    schema = (
+        "wsid string, year int, month int, day int, hour int, "
+        "temperature double, one_hour_precip double"
+    )
+    day1 = [
+        ("s1", 2008, 1, 1, 0, 10.0, 0.0),
+        ("s1", 2008, 1, 1, 12, 14.0, 1.5),
+    ]
+    eng = WeatherEngine(
+        spark,
+        spark.createDataFrame(day1, schema),
+        daily_temperature_path=str(tmp_path / "t"),
+        daily_precip_path=str(tmp_path / "p"),
+    )
+    eng.refresh_daily_tiers()
+    built_before = eng.get_monthly_hilow_temperature("s1", 2008, 1)
+
+    late = [("s1", 2008, 1, 1, 18, 21.0, 0.0)]  # rewrites date_key=20080101
+    eng.ingest_raw(spark.createDataFrame(late, schema))
+
+    before = built_before.first()
+    assert (before.high, before.low) == (14.0, 10.0)  # the captured snapshot
+    after = eng.get_monthly_hilow_temperature("s1", 2008, 1).first()
+    assert (after.high, after.low) == (21.0, 10.0)
+    daily = eng.get_daily_temperature("s1", 2008, 1, 1).first()
+    assert (daily.high, daily.low) == (21.0, 10.0)
+    assert daily.mean == pytest.approx(15.0)
+
+
+def test_concurrent_asks_during_ingests_see_whole_states(spark, tmp_path):
+    """Stress: more reader threads than cores ask the tier-path engine while
+    three ingests each rewrite the day's tier partition.  Every ask must
+    succeed and see one whole tier state, and a reader never sees an older
+    state after a newer one (each ingest swaps the snapshots forward)."""
+    import sys
+    import threading
+
+    schema = (
+        "wsid string, year int, month int, day int, hour int, "
+        "temperature double, one_hour_precip double"
+    )
+    day1 = [
+        ("s1", 2008, 1, 1, 0, 10.0, 0.0),
+        ("s1", 2008, 1, 1, 12, 14.0, 1.5),
+    ]
+    eng = WeatherEngine(
+        spark,
+        spark.createDataFrame(day1, schema),
+        daily_temperature_path=str(tmp_path / "t"),
+        daily_precip_path=str(tmp_path / "p"),
+    )
+    eng.refresh_daily_tiers()
+    highs = [14.0, 21.0, 25.0, 30.0]  # the day's high after 0..3 ingests
+    asks = [
+        lambda: eng.get_monthly_hilow_temperature("s1", 2008, 1),
+        lambda: eng.get_daily_temperature("s1", 2008, 1, 1),
+    ]
+    stop = threading.Event()
+    seen: dict[int, list[float]] = {i: [] for i in range(8)}
+    errors: list[BaseException] = []
+
+    def reader(i: int) -> None:
+        try:
+            while not stop.is_set():
+                seen[i].append(asks[i % 2]().first().high)
+        except Exception as e:  # noqa: BLE001 — reported by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=reader, args=(i,)) for i in seen]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for hour, high in zip((18, 19, 20), highs[1:]):
+            eng.ingest_raw(
+                spark.createDataFrame([("s1", 2008, 1, 1, hour, high, 0.0)], schema)
+            )
+    finally:
+        stop.set()
+        for t in threads:
+            t.join(timeout=120)
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors[0]
+    for got in seen.values():
+        assert got and set(got) <= set(highs) and got == sorted(got), got
+    assert eng.get_daily_temperature("s1", 2008, 1, 1).first().high == 30.0

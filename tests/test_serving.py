@@ -10,26 +10,35 @@ hold every request to the same 5 s budget.
 
 from __future__ import annotations
 
+import gzip
+import json
+import math
+import statistics
 import time
+import urllib.request
 from concurrent.futures import wait
 
 import pytest
+from pyspark.sql import functions as F
 
 from killrweather_spark.api.engine import WeatherEngine
+from killrweather_spark.api.http_serving import WeatherHttpServer
 from killrweather_spark.api.serving import SERVING_POOL, AsyncWeatherEngine
 from killrweather_spark.model.schemas import WEATHER_STATION
 from killrweather_spark.sources.readers import read_raw_csv
+from tests.weather_inputs import SF as WSID
+from tests.weather_inputs import WEATHER_INPUTS
 
-REF_CSV_GZ = "/root/reference/data/load/sf-2008.csv.gz"
-WSID = "724940:23234"
+REF_CSV_GZ = str(WEATHER_INPUTS / "load" / "sf-2008.csv.gz")
+STATIONS_CSV = str(WEATHER_INPUTS / "weather_stations.csv")
 ASK_TIMEOUT_S = 5.0  # AggregationActor.scala:30
+
+pytestmark = pytest.mark.usefixtures("weather_inputs")
 
 
 @pytest.fixture(scope="module")
 def async_engine(spark):
-    stations = spark.read.schema(WEATHER_STATION).csv(
-        "/root/reference/data/weather_stations.csv"
-    )
+    stations = spark.read.schema(WEATHER_STATION).csv(STATIONS_CSV)
     eng = WeatherEngine(spark, read_raw_csv(spark, REF_CSV_GZ), stations=stations)
     eng.refresh_daily_tiers()
     # warm the tier caches once so the budget measures query latency, not
@@ -103,30 +112,21 @@ def test_serving_jobs_tagged_into_fair_pool(async_engine):
     assert sc.getLocalProperty("spark.scheduler.pool") is None
 
 
-def test_http_ask_endpoint_serves_all_eight_requests(async_engine):
-    """The remote transport the reference client uses (remote actor ask,
-    KillrWeatherClientApp.scala:122-123) as JSON-over-HTTP: all eight
-    §2.11 requests answer over a real socket, NoDataAvailable is an
-    empty rows list, unknown requests/args are 400s, and every answer
-    lands inside the 5 s ask budget."""
-    import json
-    import urllib.request
+def _ask(addr, request, args):
+    req = urllib.request.Request(
+        f"http://{addr[0]}:{addr[1]}/ask",
+        data=json.dumps({"request": request, "args": args}).encode(),
+        headers={"Content-Type": "application/json"},
+        method="POST",
+    )
+    try:
+        with urllib.request.urlopen(req, timeout=ASK_TIMEOUT_S * 2) as r:
+            return r.status, json.loads(r.read())
+    except urllib.error.HTTPError as e:
+        return e.code, json.loads(e.read())
 
-    from killrweather_spark.api.http_serving import WeatherHttpServer
 
-    def ask(addr, request, args, expect=200):
-        req = urllib.request.Request(
-            f"http://{addr[0]}:{addr[1]}/ask",
-            data=json.dumps({"request": request, "args": args}).encode(),
-            headers={"Content-Type": "application/json"},
-            method="POST",
-        )
-        try:
-            with urllib.request.urlopen(req, timeout=ASK_TIMEOUT_S * 2) as r:
-                return r.status, json.loads(r.read())
-        except urllib.error.HTTPError as e:
-            return e.code, json.loads(e.read())
-
+def _serves_all_eight_requests(async_engine) -> None:
     with WeatherHttpServer(async_engine) as srv:
         addr = srv.address
         asks = [
@@ -144,37 +144,136 @@ def test_http_ask_endpoint_serves_all_eight_requests(async_engine):
         ]
         t0 = time.perf_counter()
         for name, args in asks:
-            status, body = ask(addr, name, args)
+            status, body = _ask(addr, name, args)
             assert status == 200, (name, body)
             assert body["request"] == name
             assert body["n"] == len(body["rows"]) >= 1, (name, body)
         assert time.perf_counter() - t0 < ASK_TIMEOUT_S * len(asks)
         # the demo client's wsid is in the answer, over the wire
-        status, body = ask(addr, "GetCurrentWeather", {"wsid": WSID})
+        status, body = _ask(addr, "GetCurrentWeather", {"wsid": WSID})
         assert body["rows"][0]["wsid"] == WSID
         # NoDataAvailable sentinel: unknown station → 200 with rows: []
-        status, body = ask(addr, "GetCurrentWeather", {"wsid": "000000:00000"})
+        status, body = _ask(addr, "GetCurrentWeather", {"wsid": "000000:00000"})
         assert status == 200 and body["n"] == 0 and body["rows"] == []
         # protocol errors are 400s, not crashes
-        status, body = ask(addr, "GetWeather", {"wsid": WSID})
+        status, body = _ask(addr, "GetWeather", {"wsid": WSID})
         assert status == 400 and "unknown request" in body["error"]
-        status, body = ask(addr, "GetDailyTemperature", {"wsid": WSID})
+        status, body = _ask(addr, "GetDailyTemperature", {"wsid": WSID})
         assert status == 400 and set(body["missing"]) == {"year", "month", "day"}
-        status, body = ask(
+        status, body = _ask(
             addr, "GetWeatherStation", {"wsid": WSID, "nope": 1}
         )
         assert status == 400 and body["unknown"] == ["nope"]
+
+
+def test_http_ask_endpoint_serves_all_eight_requests(async_engine):
+    """The remote transport the reference client uses (remote actor ask,
+    KillrWeatherClientApp.scala:122-123) as JSON-over-HTTP: all eight
+    §2.11 requests answer over a real socket, NoDataAvailable is an
+    empty rows list, unknown requests/args are 400s, and every answer
+    lands inside the 5 s ask budget."""
+    _serves_all_eight_requests(async_engine)
+
+
+def _late_line(lines: list[str]) -> str:
+    """The first January line that alone holds its day's high: holding it
+    back and ingesting it late must move that day's ``high``."""
+    by_day: dict[str, list[str]] = {}
+    for line in lines:
+        _, _, month, day = line.split(",")[:4]
+        if month == "01":
+            by_day.setdefault(day, []).append(line)
+    for day in sorted(by_day):
+        temps = sorted((float(ln.split(",")[5]), ln) for ln in by_day[day])
+        if temps[-1][0] > temps[-2][0]:
+            return temps[-1][1]
+    raise AssertionError("no January day with a unique high")
+
+
+@pytest.fixture(scope="module")
+def tier_path_engine(spark, tmp_path_factory):
+    """The sample served in tier-path mode, with one observation held back
+    so a test can ingest it late (see ``_late_line``)."""
+    with gzip.open(REF_CSV_GZ, "rt") as f:
+        lines = f.read().splitlines()
+    late = _late_line(lines)
+    y, m, d, h = (int(x) for x in late.split(",")[1:5])
+    held_back = (
+        (F.col("year") == y) & (F.col("month") == m)
+        & (F.col("day") == d) & (F.col("hour") == h)
+    )
+    tiers = tmp_path_factory.mktemp("serving_tiers")
+    eng = WeatherEngine(
+        spark,
+        read_raw_csv(spark, REF_CSV_GZ).filter(~held_back),
+        stations=spark.read.schema(WEATHER_STATION).csv(STATIONS_CSV),
+        daily_temperature_path=str(tiers / "daily_temperature"),
+        daily_precip_path=str(tiers / "daily_precip"),
+    )
+    eng.refresh_daily_tiers()
+    day_lines = [
+        ln for ln in lines if [int(x) for x in ln.split(",")[1:4]] == [y, m, d]
+    ]
+    return eng, late, day_lines
+
+
+def test_http_ask_endpoint_serves_all_eight_requests_from_tier_paths(
+    tier_path_engine,
+):
+    """The same eight requests against an engine whose daily tiers live on
+    disk (tier-path mode) and are served from their snapshots."""
+    with AsyncWeatherEngine(tier_path_engine[0]) as aeng:
+        _serves_all_eight_requests(aeng)
+
+
+def test_tier_path_serving_sees_ingest(tier_path_engine, tmp_path):
+    """After ``ingest_raw`` returns, the wire answers reflect the write: a
+    new latest hour is GetCurrentWeather, and a late row for an old day
+    moves that day's GetDailyTemperature, which reads the daily tier."""
+    eng, late, day_lines = tier_path_engine
+    _, y, m, d = late.split(",")[:4]
+    day_key = {"wsid": WSID, "year": int(y), "month": int(m), "day": int(d)}
+    all_temps = [float(ln.split(",")[5]) for ln in day_lines]
+    early_temps = [float(ln.split(",")[5]) for ln in day_lines if ln != late]
+    new_hour = f"{WSID},2009,01,01,00,12.5,8.1,1016.2,270,3.1,2,0.0,0.0"
+    staged = tmp_path / "batch.csv"
+    staged.write_text(f"{new_hour}\n{late}\n")
+
+    with AsyncWeatherEngine(eng) as aeng, WeatherHttpServer(aeng) as srv:
+        status, before = _ask(srv.address, "GetDailyTemperature", day_key)
+        assert status == 200 and before["rows"][0]["high"] == max(early_temps)
+        status, body = _ask(srv.address, "GetCurrentWeather", {"wsid": WSID})
+        row = body["rows"][0]
+        assert (row["year"], row["month"], row["day"], row["hour"]) == (
+            2008, 12, 31, 23,
+        )
+
+        eng.ingest_raw(read_raw_csv(eng.spark, str(staged)))
+
+        status, body = _ask(srv.address, "GetCurrentWeather", {"wsid": WSID})
+        row = body["rows"][0]
+        assert status == 200
+        assert (row["year"], row["month"], row["day"], row["hour"]) == (
+            2009, 1, 1, 0,
+        )
+        assert row["temperature"] == 12.5
+        status, body = _ask(srv.address, "GetDailyTemperature", day_key)
+        assert status == 200 and body["n"] == 1
+        got = body["rows"][0]
+        assert got["high"] == max(all_temps) > before["rows"][0]["high"]
+        assert got["low"] == min(all_temps)
+        assert got["mean"] == pytest.approx(statistics.fmean(all_temps))
+        assert got["variance"] == pytest.approx(statistics.pvariance(all_temps))
+        assert got["stdev"] == pytest.approx(
+            math.sqrt(statistics.pvariance(all_temps))
+        )
 
 
 def test_http_ask_concurrent_clients_overlap(async_engine):
     """Four wire clients firing the six-query loop at once: every answer
     arrives, total wall time shows overlap (the FAIR-pool + thread-pool
     path the in-process test pins, now through real sockets)."""
-    import json
-    import urllib.request
     from concurrent.futures import ThreadPoolExecutor
-
-    from killrweather_spark.api.http_serving import WeatherHttpServer
 
     loop = [
         ("GetWeatherStation", {"wsid": WSID}),

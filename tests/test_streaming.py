@@ -22,14 +22,15 @@ from killrweather_spark.streaming.pipeline import (
     parsed_observations,
     start_ingest,
 )
+from tests.weather_inputs import WEATHER_INPUTS
 
-REF_CSV_GZ = "/root/reference/data/load/sf-2008.csv.gz"
+REF_CSV_GZ = str(WEATHER_INPUTS / "load" / "sf-2008.csv.gz")
 
 
 @pytest.fixture()
-def lines_dir(tmp_path: pathlib.Path) -> str:
-    """First 2000 reference observation lines as a staged text file
-    (≙ the Kafka topic's backlog)."""
+def lines_dir(tmp_path: pathlib.Path, weather_inputs) -> str:
+    """First 2000 observation lines of the seeded sample as staged text
+    files (≙ the Kafka topic's backlog)."""
     with gzip.open(REF_CSV_GZ, "rt") as f:
         lines = [next(f) for _ in range(2000)]
     d = tmp_path / "incoming"
@@ -546,6 +547,25 @@ def test_running_max_by_key_string_keys(spark, tmp_path):
     )
     got = {r.wsid: r.max_value for r in out.collect()}
     assert got == {"a:1": 3.0, "b:2": 2.0}
+
+
+def test_run_stream_to_batch_cleans_up_when_the_stream_fails(spark, tmp_path):
+    """A drain whose stream fails must still drop its memory-sink view and
+    delete its checkpoint dir, and hand the failure to the caller."""
+    from pyspark.errors import StreamingQueryException
+
+    from killrweather_spark.streaming.pipeline import run_stream_to_batch
+
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "r.json").write_text('{"v": 1}\n')
+    stream = spark.readStream.schema("v int").json(str(src))
+    failing = stream.select(F.assert_true(F.col("v") < 0, F.lit("boom")).alias("ok"))
+    ckpt = tmp_path / "ckpt"
+    with pytest.raises(StreamingQueryException, match="boom"):
+        run_stream_to_batch(failing, str(ckpt), "failing_drain", "append")
+    assert not ckpt.exists()
+    assert not spark.catalog.tableExists("failing_drain")
 
 
 def test_cdc_pruned_rejects_escaped_partition_values(spark, tmp_path):
